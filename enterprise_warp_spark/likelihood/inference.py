@@ -5,7 +5,7 @@ paramfile -> noise-model JSON -> per-pulsar signal terms -> PTA -> sequential
 sampler. Here the same config compiles to a sample-parallel plan:
 
     noise-model rows (plans/noisemodel) -> red-noise components + priors
-      -> samples table (likelihood/sampling, rand(seed) columns)
+      -> samples table (likelihood/sampling, seeded numpy draws on the driver)
       -> GP kernel x pulsars (likelihood/gp, applyInPandas)
       -> A13 sum -> importance-weighted posterior summary
 
@@ -25,6 +25,7 @@ from __future__ import annotations
 import json
 
 import pandas as pd
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 
 from enterprise_warp_spark.likelihood.gp import (
@@ -306,19 +307,28 @@ def run_adaptive_inference(
         n_per_round, len(priors) + 1, "run_adaptive_inference"
     )
 
+    # every wave re-reads the residuals: keep them for the run (unless the
+    # caller already does), and release them however the run ends
+    owned = residuals.storageLevel == StorageLevel.NONE
+    res = residuals.persist() if owned else residuals
+
     def score(samples_df: DataFrame) -> DataFrame:
-        pdf = samples_df.toPandas()
-        return total_loglik(
-            gp_loglik_per_pulsar(residuals, pdf, nfreqs, components=comps or None)
+        # per-pulsar rows; the sampler sums them per sample on the driver
+        return gp_loglik_per_pulsar(
+            res, samples_df.toPandas(), nfreqs, components=comps or None
         )
 
-    return adaptive_posterior(
-        spark, priors, score, rounds, n_per_round, seed,
-        final_is=final_is, final_is_waves=final_is_waves,
-        final_is_ess_target=final_is_ess_target,
-        final_is_max_waves=final_is_max_waves,
-        diagnostics=diagnostics,
-    )
+    try:
+        return adaptive_posterior(
+            spark, priors, score, rounds, n_per_round, seed,
+            final_is=final_is, final_is_waves=final_is_waves,
+            final_is_ess_target=final_is_ess_target,
+            final_is_max_waves=final_is_max_waves,
+            diagnostics=diagnostics,
+        )
+    finally:
+        if owned:
+            res.unpersist()
 
 
 def run_adaptive_from_general2(

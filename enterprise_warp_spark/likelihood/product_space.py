@@ -14,7 +14,7 @@ Spark-native equivalent: importance sampling over the same product space.
   1. compile every model section to (priors, kernel components)
      (likelihood/inference.compile_priors_and_components);
   2. sample the union parameter space + nmodel from the prior
-     (rand(seed) columns, sample-parallel);
+     (seeded draws on the driver, sampling.sample_priors);
   3. partition samples by round(nmodel) and score each slice with ITS
      model's GP kernel only (gp_loglik_per_pulsar) — like the reference,
      a sample never pays for the other models' likelihoods;

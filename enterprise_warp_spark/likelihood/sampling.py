@@ -2,20 +2,31 @@
 
 Reference priors (enterprise_models.py:578-589 + bilby adapters
 bilby_warp.py:40-106): Uniform, LinearExponential (log-uniform amplitude),
-Normal, TruncatedNormal, Constant. Here each prior is a column expression
-over rand(seed) — deterministic, reproducible, and generated distributed
-(no driver-side RNG loops).
+Normal, TruncatedNormal, Constant, drawn as numpy transforms of one
+numpy.random.Generator per draw.
 
 Posterior estimation: importance weights w_i = exp(lnl_i - max lnl) over the
 prior sample; summaries (mean, credible intervals) are weighted aggregates.
 Replaces the reference's sequential MCMC with a sample-parallel scheme — the
 number of likelihood evaluations is the same, but they all run at once.
+
+The sampler's control loop runs on the driver: every CEM round and
+importance wave draws its proposal there (one Generator seeded from the
+seed, the round and the wave), computes log pi / log q in numpy, and hands
+the wave to score_fn as one DataFrame. Only the likelihood scoring is
+distributed; the driver collects (sample_id, lnl) and sums a sample's rows
+itself. Draws are deterministic given the seed and independent of the
+session's parallelism (they differ from the earlier column-expression
+draws for the same seed).
 """
 
 from __future__ import annotations
 
+import math
 from dataclasses import dataclass
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -31,9 +42,8 @@ class Prior:
 
 
 # Acklam's inverse normal CDF — a piecewise rational approximation
-# (~1.15e-9 relative error), published algorithm; expressed as pure column
-# arithmetic so truncated-normal sampling stays JVM-side (no erfinv in
-# Spark SQL and no scipy in this environment).
+# (~1.15e-9 relative error), published algorithm (no erfinv in numpy and no
+# scipy in this environment).
 _ACK_A = (-3.969683028665376e01, 2.209460984245205e02, -2.759285104469687e02,
           1.383577518672690e02, -3.066479806614716e01, 2.506628277459239e00)
 _ACK_B = (-5.447609879822406e01, 1.615858368580409e02, -1.556989798598866e02,
@@ -44,69 +54,115 @@ _ACK_D = (7.784695709041462e-03, 3.224671290700398e-01, 2.445134137142996e00,
           3.754408661907416e00)
 
 
-def _poly(q: F.Column, coeffs) -> F.Column:
-    out = F.lit(float(coeffs[0]))
-    for c in coeffs[1:]:
-        out = out * q + F.lit(float(c))
-    return out
-
-
-def probit(p: F.Column) -> F.Column:
-    """Inverse standard-normal CDF as a column expression (Acklam)."""
-    # clamp away the open-interval endpoints: F.rand() can return exactly
+def probit(p) -> np.ndarray:
+    """Inverse standard-normal CDF, elementwise (Acklam)."""
+    # clamp away the open-interval endpoints: a uniform draw can be exactly
     # 0.0 (and an infinite truncation bound maps it there), where
     # sqrt(-2*log(0)) = inf and the rational tail becomes inf/inf = NaN —
     # one poisoned sample row. 1e-15 keeps ~|z| <= 8, far outside any
     # realistic truncation window.
-    p = F.greatest(F.least(p, F.lit(1.0 - 1e-15)), F.lit(1e-15))
+    p = np.clip(np.asarray(p, dtype=float), 1e-15, 1.0 - 1e-15)
     p_low = 0.02425
     q_c = p - 0.5
     r_c = q_c * q_c
-    central = (_poly(r_c, _ACK_A) * q_c) / (_poly(r_c, _ACK_B) * r_c + F.lit(1.0))
-    q_l = F.sqrt(-2.0 * F.log(p))
-    lower = _poly(q_l, _ACK_C) / (_poly(q_l, _ACK_D) * q_l + F.lit(1.0))
-    q_u = F.sqrt(-2.0 * F.log(1.0 - p))
-    upper = -_poly(q_u, _ACK_C) / (_poly(q_u, _ACK_D) * q_u + F.lit(1.0))
+    central = (np.polyval(_ACK_A, r_c) * q_c) / (np.polyval(_ACK_B, r_c) * r_c + 1.0)
+    q_l = np.sqrt(-2.0 * np.log(p))
+    lower = np.polyval(_ACK_C, q_l) / (np.polyval(_ACK_D, q_l) * q_l + 1.0)
+    q_u = np.sqrt(-2.0 * np.log(1.0 - p))
+    upper = -np.polyval(_ACK_C, q_u) / (np.polyval(_ACK_D, q_u) * q_u + 1.0)
+    return np.where(p < p_low, lower, np.where(p > 1.0 - p_low, upper, central))
+
+
+def _trunc_cdf(p: Prior) -> tuple[float, float]:
+    """Standard-normal CDF of a truncnormal prior's bounds (0 / 1 when
+    infinite)."""
+
+    def cdf(x: float) -> float:
+        return (math.erf(((x - p.a) / p.b) / math.sqrt(2.0)) + 1.0) / 2.0
+
     return (
-        F.when(p < p_low, lower)
-        .when(p > 1.0 - p_low, upper)
-        .otherwise(central)
+        cdf(p.lo) if math.isfinite(p.lo) else 0.0,
+        cdf(p.hi) if math.isfinite(p.hi) else 1.0,
     )
 
 
-def _column(p: Prior, u: F.Column, g: F.Column) -> F.Column:
-    if p.kind == "uniform":
-        return u * (p.b - p.a) + p.a
-    if p.kind == "linearexp":  # log10-amplitude uniform in [a, b]
-        return u * (p.b - p.a) + p.a
+def _rng(seed: int, stream: int, step: int) -> np.random.Generator:
+    """The one Generator of a draw: keyed by the seed, the stream (0: prior
+    and CEM rounds, 1: importance waves) and the round or wave."""
+    return np.random.default_rng([seed % 2**64, stream, step])
+
+
+def _draw(p: Prior, rng: np.random.Generator, n: int) -> np.ndarray:
+    if p.kind in ("uniform", "linearexp"):  # linearexp: log10-amplitude uniform
+        return rng.random(n) * (p.b - p.a) + p.a
     if p.kind == "normal":
-        return g * p.b + p.a
+        return rng.standard_normal(n) * p.b + p.a
     if p.kind == "truncnormal":
         # exact inverse-CDF sampling of N(a, b) truncated to [lo, hi]
-        # (bilby_warp.py:67-68 TruncatedGaussian): the bound CDFs are
-        # plain driver-side constants, only probit runs per row
-        import math as _math
-
-        alpha = ( _math.erf(((p.lo - p.a) / p.b) / _math.sqrt(2.0)) + 1.0) / 2.0 \
-            if _math.isfinite(p.lo) else 0.0
-        beta = (_math.erf(((p.hi - p.a) / p.b) / _math.sqrt(2.0)) + 1.0) / 2.0 \
-            if _math.isfinite(p.hi) else 1.0
-        return probit(u * (beta - alpha) + F.lit(alpha)) * p.b + p.a
+        # (bilby_warp.py:67-68 TruncatedGaussian)
+        alpha, beta = _trunc_cdf(p)
+        return probit(rng.random(n) * (beta - alpha) + alpha) * p.b + p.a
     if p.kind == "constant":
-        return F.lit(p.a)
+        return np.full(n, float(p.a))
     raise ValueError(f"unknown prior kind {p.kind}")
+
+
+def _prior_frame(
+    priors: list[Prior], n: int, rng: np.random.Generator
+) -> pd.DataFrame:
+    """(sample_id, <param columns>) drawn from the priors."""
+    cols = {"sample_id": np.arange(n, dtype=np.int64)}
+    for p in priors:
+        cols[p.name] = _draw(p, rng, n)
+    return pd.DataFrame(cols)
 
 
 def sample_priors(
     spark: SparkSession, priors: list[Prior], n: int, seed: int = 42
 ) -> DataFrame:
-    """(sample_id, <param columns>) — one rand/randn stream per parameter."""
-    df = spark.range(n).withColumnRenamed("id", "sample_id")
-    for i, p in enumerate(priors):
-        u = F.rand(seed + 1000 * i)
-        g = F.randn(seed + 1000 * i)
-        df = df.withColumn(p.name, _column(p, u, g))
-    return df
+    """(sample_id, <param columns>) — n prior draws, deterministic in seed."""
+    return spark.createDataFrame(_prior_frame(priors, n, _rng(seed, 0, 0)))
+
+
+def _refined_frame(
+    priors: list[Prior],
+    centers: dict[str, float],
+    scales: dict[str, float],
+    n: int,
+    rng: np.random.Generator,
+) -> pd.DataFrame:
+    """Gaussian proposal around `centers`, clipped to the prior box — one
+    CEM round."""
+    cols = {"sample_id": np.arange(n, dtype=np.int64)}
+    for p in priors:
+        if p.kind == "constant":
+            cols[p.name] = np.full(n, float(p.a))
+            continue
+        x = rng.standard_normal(n) * float(scales[p.name]) + float(centers[p.name])
+        if p.kind in ("uniform", "linearexp"):
+            x = np.clip(x, p.a, p.b)
+        elif p.kind == "truncnormal":
+            x = np.clip(x, p.lo, p.hi)
+        cols[p.name] = x
+    return pd.DataFrame(cols)
+
+
+def _score(spark: SparkSession, score_fn, samples: pd.DataFrame) -> pd.DataFrame:
+    """One distributed scoring of a wave -> (sample_id, lnl, <samples cols>).
+
+    score_fn may return several rows per sample_id (one per pulsar); the
+    driver sums them. As in Spark's sum, NaN and -inf propagate and nulls
+    are skipped (a sample whose rows are all null scores NaN). Samples
+    score_fn does not return are dropped."""
+    tbl = score_fn(spark.createDataFrame(samples)).select("sample_id", "lnl").toArrow()
+    ids, lnl = tbl["sample_id"].to_numpy(), tbl["lnl"]
+    null = lnl.is_null().to_numpy()
+    ids, inv = np.unique(ids, return_inverse=True)
+    total = np.bincount(inv, np.where(null, 0.0, lnl.to_numpy()), len(ids))
+    total[np.bincount(inv, ~null, len(ids)) == 0] = np.nan
+    return pd.DataFrame({"sample_id": ids, "lnl": total}).merge(
+        samples, on="sample_id"
+    )
 
 
 def posterior_summary(
@@ -154,91 +210,54 @@ def posterior_quantiles(
     sample table crosses the driver — bounded by the same
     MAX_ADAPTIVE_N_PER_ROUND contract every adaptive round already pays
     (sample tables are metadata-scale next to the residual data)."""
-    import numpy as _np
-
     pdf = samples_lnl.select(*param_cols, logw_col).toPandas()
     lnl = pdf[logw_col].to_numpy(dtype=float)
-    keep = _np.isfinite(lnl)
+    keep = np.isfinite(lnl)
     pdf, lnl = pdf[keep], lnl[keep]
-    w = _np.exp(lnl - lnl.max())
+    w = np.exp(lnl - lnl.max())
     out: dict[str, dict[float, float]] = {}
     for c in param_cols:
         v = pdf[c].to_numpy(dtype=float)
-        order = _np.argsort(v, kind="mergesort")
-        cum = _np.cumsum(w[order])
+        order = np.argsort(v, kind="mergesort")
+        cum = np.cumsum(w[order])
         total = cum[-1]
         out[c] = {
-            q: float(v[order][int(_np.searchsorted(cum, q * total))])
+            q: float(v[order][int(np.searchsorted(cum, q * total))])
             for q in qs
         }
     return out
 
 
-def refined_samples(
-    spark: SparkSession,
-    priors: list[Prior],
-    centers: dict[str, float],
-    scales: dict[str, float],
-    n: int,
-    seed: int,
-) -> DataFrame:
-    """Gaussian proposal around `centers`, clipped to the prior box —
-    one adaptive-importance-sampling round (all rand/randn columns)."""
-    df = spark.range(n).withColumnRenamed("id", "sample_id")
-    for i, p in enumerate(priors):
-        if p.kind == "constant":
-            df = df.withColumn(p.name, F.lit(p.a))
-            continue
-        g = F.randn(seed + 1000 * i)
-        col = g * float(scales[p.name]) + float(centers[p.name])
-        if p.kind in ("uniform", "linearexp"):
-            col = F.greatest(F.lit(p.a), F.least(F.lit(p.b), col))
-        elif p.kind == "truncnormal":
-            import math as _math
-
-            if _math.isfinite(p.lo):
-                col = F.greatest(F.lit(p.lo), col)
-            if _math.isfinite(p.hi):
-                col = F.least(F.lit(p.hi), col)
-        df = df.withColumn(p.name, col)
-    return df
+_LOG_ZERO = -1.0e30  # finite stand-in for log(0): keeps the weight
+# arithmetic NaN-free (exp gives exactly 0.0, logaddexp stays well-defined)
 
 
-_LOG_ZERO = -1.0e30  # finite stand-in for log(0): keeps column arithmetic
-# NaN-free (exp gives exactly 0.0, greatest/when stay well-defined)
-
-
-def _log_prior_density(priors: list[Prior], of=F.col) -> F.Column:
-    """Sum of per-parameter prior log-densities as one column expression
-    (constants contribute 0 — they are point masses on both sides of any
-    importance ratio). Outside any parameter's support the sum collapses
-    to _LOG_ZERO, zeroing the weight."""
-    import math as _math
-
-    total = F.lit(0.0)
-    ok = F.lit(True)
+def _log_prior_density(priors: list[Prior], samples: pd.DataFrame) -> np.ndarray:
+    """Sum of per-parameter prior log-densities per sample row (constants
+    contribute 0 — they are point masses on both sides of any importance
+    ratio). Outside any parameter's support the sum collapses to
+    _LOG_ZERO, zeroing the weight."""
+    total = np.zeros(len(samples))
+    ok = np.ones(len(samples), dtype=bool)
     for p in priors:
         if p.kind == "constant":
             continue
-        x = of(p.name)
+        x = samples[p.name].to_numpy(dtype=float)
         if p.kind in ("uniform", "linearexp"):
-            total = total + F.lit(-_math.log(p.b - p.a))
+            total = total - math.log(p.b - p.a)
             ok = ok & (x >= p.a) & (x <= p.b)
         elif p.kind in ("normal", "truncnormal"):
             z = (x - p.a) / p.b
-            total = total - 0.5 * z * z + F.lit(
-                -_math.log(p.b) - 0.5 * _math.log(2.0 * _math.pi)
+            total = total - 0.5 * z * z + (
+                -math.log(p.b) - 0.5 * math.log(2.0 * math.pi)
             )
             if p.kind == "truncnormal":
-                alpha = (_math.erf(((p.lo - p.a) / p.b) / _math.sqrt(2.0)) + 1.0) / 2.0 \
-                    if _math.isfinite(p.lo) else 0.0
-                beta = (_math.erf(((p.hi - p.a) / p.b) / _math.sqrt(2.0)) + 1.0) / 2.0 \
-                    if _math.isfinite(p.hi) else 1.0
-                total = total + F.lit(-_math.log(max(beta - alpha, 1e-300)))
+                alpha, beta = _trunc_cdf(p)
+                total = total - math.log(max(beta - alpha, 1e-300))
                 ok = ok & (x >= p.lo) & (x <= p.hi)
         else:
             raise ValueError(f"unknown prior kind {p.kind}")
-    return F.when(ok, total).otherwise(F.lit(_LOG_ZERO))
+    return np.where(ok, total, _LOG_ZERO)
 
 
 def importance_posterior(
@@ -259,7 +278,7 @@ def importance_posterior(
     diagnostics: dict | None = None,
 ) -> DataFrame:
     """Defensive-mixture importance sampling around a located mode ->
-    (sample_id, <params>, lnl, logw, wave) with VALID posterior weights.
+    (sample_id, lnl, <params>, logw, wave) with VALID posterior weights.
 
     The CEM waves in adaptive_posterior LOCATE the high-likelihood region
     but their elite-weighted samples are proposal-biased (weights
@@ -284,12 +303,12 @@ def importance_posterior(
     elite covariance) seeds wave 1. Each sample keeps its OWN wave's
     proposal density in logw, so the pooled table is a valid
     multiple-proposal self-normalized IS estimate. Per wave cost: ONE
-    distributed scoring of n samples; the refit moments are the only
-    driver-side values (d + d^2 floats).
+    distributed scoring of n samples.
 
-    All sampling is column arithmetic (rand/randn streams keyed by seed +
-    wave): no driver RNG, deterministic; wave 1 uses the diagonal
-    (inflate * scales)^2 covariance.
+    Each wave's proposal is drawn on the driver from one Generator keyed
+    by (seed, wave), with log pi and log q computed in numpy:
+    deterministic given the seed, whatever the session's parallelism.
+    Wave 1 uses the diagonal (inflate * scales)^2 covariance.
 
     ess_target (r13 verdict #6): production mode — keep appending T=1
     waves past the `waves` cooling ladder until the pooled untempered
@@ -308,27 +327,21 @@ def importance_posterior(
             "prior_frac must be strictly inside (0, 1): the defensive "
             f"mixture needs both components (got {prior_frac})"
         )
-    import math as _math
-
-    import numpy as _np
-    import pandas as _pd
-
     sampled = [p for p in priors if p.kind != "constant"]
     names = [p.name for p in sampled]
     d = len(names)
-    mu = _np.array([float(centers[c]) for c in names])
-    base = _np.array([float(max(scales[c], 1e-12)) for c in names])
+    mu = np.array([float(centers[c]) for c in names])
+    base = np.array([float(max(scales[c], 1e-12)) for c in names])
     cov = (
-        _np.asarray(init_cov, dtype=float).copy()
+        np.asarray(init_cov, dtype=float).copy()
         if init_cov is not None
-        else _np.diag(base**2)
+        else np.diag(base**2)
     ) * inflate**2
-    # the full-covariance proposal spells the quadratic form as ~d^2/2
-    # column terms; past ~40 sampled dimensions that expression tree (and
-    # the d x d refit) stops paying for itself — fall back to the
-    # diagonal family (refits below project to the diagonal too)
+    # past ~40 sampled dimensions the d x d refit stops paying for itself
+    # — fall back to the diagonal family (refits below project to the
+    # diagonal too)
     diag_only = d > 40
-    pooled: _pd.DataFrame | None = None
+    pooled: pd.DataFrame | None = None
     # wave budget: fixed `waves` without a target (bit-identical to the
     # pre-ESS behavior); with ess_target, extension waves run at T = 1
     # until the target or the cap
@@ -340,78 +353,52 @@ def importance_posterior(
     ess_per_wave: list[float] = []
     wv = 0
     while True:
-        sw = seed + 60013 * wv
         T_w = (
             temper0 ** ((waves - 1 - wv) / (waves - 1))
             if waves > 1 and wv < waves
             else 1.0
         )
-        # rand/randn streams are seeded PER PARTITION: pin the partition
-        # count so the drawn samples (and therefore the whole posterior)
-        # do not depend on the session's default parallelism
         # regularize: keep the proposal from collapsing below 2% of the
         # initial per-axis scale (the CEM floor convention)
-        cov = cov + _np.diag((0.02 * base) ** 2)
+        cov = cov + np.diag((0.02 * base) ** 2)
         if diag_only:
-            cov = _np.diag(_np.diag(cov))
-        L = _np.linalg.cholesky(cov)
-        P = _np.linalg.inv(cov)
-        _sign, logdet = _np.linalg.slogdet(cov)
-        df = spark.range(0, n, 1, 32).withColumnRenamed("id", "sample_id")
-        pick_prior = F.rand(sw - 7) < prior_frac
-        gcols = [F.randn(sw + 1000 * k + 499) for k in range(d)]
-        for p in priors:
-            if p.kind == "constant":
-                df = df.withColumn(p.name, F.lit(p.a))
-        for j, p in enumerate(sampled):
-            u = F.rand(sw + 1000 * j)
-            gx = F.lit(float(mu[j]))
-            for k in range(j + 1):
-                if L[j, k] != 0.0:
-                    gx = gx + F.lit(float(L[j, k])) * gcols[k]
-            df = df.withColumn(
-                p.name, F.when(pick_prior, _column(p, u, gcols[j])).otherwise(gx)
-            )
-        quad = F.lit(0.0)
-        for j in range(d):
-            for k in range(j, d):
-                c = float(P[j, k] * (1.0 if j == k else 2.0))
-                if c != 0.0:
-                    quad = quad + F.lit(c) * (
-                        F.col(names[j]) - float(mu[j])
-                    ) * (F.col(names[k]) - float(mu[k]))
-        log_g = -0.5 * quad + F.lit(
-            -0.5 * (d * _math.log(2.0 * _math.pi) + logdet)
+            cov = np.diag(np.diag(cov))
+        L = np.linalg.cholesky(cov)
+        P = np.linalg.inv(cov)
+        _sign, logdet = np.linalg.slogdet(cov)
+        rng = _rng(seed, 1, wv)
+        df = _prior_frame(priors, n, rng)
+        pick_prior = rng.random(n) < prior_frac
+        gx = mu + rng.standard_normal((n, d)) @ L.T
+        df[names] = np.where(pick_prior[:, None], df[names].to_numpy(), gx)
+        dx = df[names].to_numpy() - mu
+        log_g = -0.5 * np.einsum("ij,jk,ik->i", dx, P, dx) - 0.5 * (
+            d * math.log(2.0 * math.pi) + logdet
         )
-        log_pi = _log_prior_density(priors)
-        t1 = F.lit(_math.log(prior_frac)) + log_pi
-        t2 = F.lit(_math.log(1.0 - prior_frac)) + log_g
-        m = F.greatest(t1, t2)
-        log_q = m + F.log(F.exp(t1 - m) + F.exp(t2 - m))
-        df = df.withColumn("__log_pi", log_pi).withColumn("__log_q", log_q)
-        scored = score_fn(
-            df.select("sample_id", *[p.name for p in priors])
-        ).join(df, "sample_id")
-        scored = scored.withColumn(
-            "logw",
-            F.when(
-                F.col("__log_pi") <= _LOG_ZERO / 2, F.lit(_LOG_ZERO)
-            ).otherwise(F.col("lnl") + F.col("__log_pi") - F.col("__log_q")),
-        ).drop("__log_pi", "__log_q")
-        part = scored.toPandas()
+        log_pi = _log_prior_density(priors, df)
+        log_q = np.logaddexp(
+            math.log(prior_frac) + log_pi, math.log(1.0 - prior_frac) + log_g
+        )
+        part = _score(spark, score_fn, df)
+        row = part["sample_id"].to_numpy()  # sample_id is the row of df
+        part["logw"] = np.where(
+            log_pi[row] <= _LOG_ZERO / 2,
+            _LOG_ZERO,
+            part["lnl"].to_numpy() + log_pi[row] - log_q[row],
+        )
         part["sample_id"] = part["sample_id"] + wv * n
         part["wave"] = wv
-        pooled = part if pooled is None else _pd.concat(
+        pooled = part if pooled is None else pd.concat(
             [pooled, part], ignore_index=True
         )
         # pooled untempered ESS after this wave — the diagnostic users
         # read, and the ess_target loop variable
         lw = pooled["logw"].to_numpy(dtype=float)
-        fin = _np.isfinite(pooled["lnl"].to_numpy(dtype=float)) & (
+        fin = np.isfinite(pooled["lnl"].to_numpy(dtype=float)) & (
             lw > _LOG_ZERO / 2
         )
         if fin.any():
-            w_all = _np.exp(lw[fin] - lw[fin].max())
+            w_all = np.exp(lw[fin] - lw[fin].max())
             ess_now = float(w_all.sum() ** 2 / (w_all**2).sum())
         else:
             ess_now = 0.0
@@ -439,7 +426,7 @@ def importance_posterior(
             wv += 1
             continue
         X = pooled.loc[fin, names].to_numpy(dtype=float)
-        w = _np.exp((lw[fin] - lw[fin].max()) / T_w)
+        w = np.exp((lw[fin] - lw[fin].max()) / T_w)
         w = w / w.sum()
         mu = w @ X
         dx = X - mu
@@ -469,20 +456,16 @@ def log_evidence(pooled: DataFrame, logw_col: str = "logw") -> float:
 
     Driver cost: one logsumexp over the sample table's weight column (the
     same MAX_ADAPTIVE_N_PER_ROUND-bounded table every summary reads)."""
-    import math as _math
-
-    import numpy as _np
-
-    lw = _np.array(
+    lw = np.array(
         [r[0] for r in pooled.select(logw_col).collect()], dtype=float
     )
     n = len(lw)
-    lw = lw[_np.isfinite(lw) & (lw > _LOG_ZERO / 2)]
+    lw = lw[np.isfinite(lw) & (lw > _LOG_ZERO / 2)]
     if not len(lw):
         return float("-inf")
     m = lw.max()
     # out-of-support draws contribute exp(-inf) = 0 but still count in N
-    return float(m + _math.log(_np.exp(lw - m).sum()) - _math.log(n))
+    return float(m + math.log(np.exp(lw - m).sum()) - math.log(n))
 
 
 # adaptive_posterior round-trips each round's scored samples through the
@@ -515,7 +498,8 @@ def adaptive_posterior(
     did). Replaces the reference's sequential MCMC exploration with waves of
     embarrassingly parallel scoring; deterministic given the seed.
 
-    score_fn(samples_df) -> DataFrame(sample_id, lnl).
+    score_fn(samples_df) -> DataFrame(sample_id, lnl), one or more rows per
+    sample (rows sharing a sample_id are summed on the driver).
     Returns (all_scored_df, summary_row_df over the final elite-weighted set).
 
     final_is > 0 appends ONE defensive importance_posterior pass of that
@@ -524,9 +508,6 @@ def adaptive_posterior(
     the CEM waves find the region, the IS pass turns it into a valid
     posterior estimate (medians/bands via posterior_quantiles(...,
     logw_col='logw'))."""
-    import numpy as _np
-    import pandas as _pd
-
     if n_per_round > MAX_ADAPTIVE_N_PER_ROUND:
         raise ValueError(
             f"adaptive_posterior n_per_round={n_per_round} exceeds the "
@@ -536,23 +517,18 @@ def adaptive_posterior(
             "in parallel instead"
         )
 
-    def _np_isfinite(series):
-        return _np.isfinite(series.to_numpy())
-
     sampled = [p for p in priors if p.kind != "constant"]
     names = [p.name for p in sampled]
     widths = {p.name: (p.b - p.a) if p.kind in ("uniform", "linearexp") else p.b
               for p in sampled}
-    samples = sample_priors(spark, priors, n_per_round, seed)
-    seen: _pd.DataFrame | None = None
-    joined = None
+    samples = _prior_frame(priors, n_per_round, _rng(seed, 0, 0))
+    seen: pd.DataFrame | None = None
     n_elite = max(int(n_per_round * elite_frac), 12)
     for rnd in range(rounds):
-        joined = score_fn(samples).join(samples, "sample_id")
-        part = joined.toPandas()
-        part = part[_np_isfinite(part["lnl"])]  # -inf/NaN scores carry no info
+        part = _score(spark, score_fn, samples)
+        part = part[np.isfinite(part["lnl"].to_numpy())]  # -inf/NaN scores carry no info
         part["sample_id"] = part["sample_id"] + rnd * n_per_round
-        seen = part if seen is None else _pd.concat([seen, part], ignore_index=True)
+        seen = part if seen is None else pd.concat([seen, part], ignore_index=True)
         if rnd == rounds - 1:
             break
         elites = seen.nlargest(n_elite, "lnl")
@@ -560,8 +536,8 @@ def adaptive_posterior(
         scales = {
             c: max(float(elites[c].std()), 0.02 * abs(widths[c])) for c in names
         }
-        samples = refined_samples(
-            spark, priors, centers, scales, n_per_round, seed + 7919 * (rnd + 1)
+        samples = _refined_frame(
+            priors, centers, scales, n_per_round, _rng(seed, 0, rnd + 1)
         )
     if final_is:
         elites = seen.nlargest(n_elite, "lnl")
@@ -573,7 +549,7 @@ def adaptive_posterior(
         # axis at the CEM scale floor) so the first wave already knows the
         # local parameter correlations
         ex = elites[names].to_numpy(dtype=float)
-        cov0 = _np.cov(ex, rowvar=False, ddof=0) + _np.diag(
+        cov0 = np.cov(ex, rowvar=False, ddof=0) + np.diag(
             [(0.02 * abs(widths[c])) ** 2 for c in names]
         )
         is_df = importance_posterior(

@@ -1,4 +1,5 @@
 import os
+from pathlib import Path
 
 import pytest
 
@@ -93,7 +94,46 @@ SLOW_TESTS = frozenset((
 ))
 
 
+# SLOW_TESTS entries are relative to the repository root (the rootdir its
+# pyproject.toml sets), whatever directory pytest runs from
+ROOT = Path(__file__).resolve().parent.parent
+
+
+def _from_root(path) -> str | None:
+    try:
+        return Path(path).resolve().relative_to(ROOT).as_posix()
+    except ValueError:
+        return None
+
+
+@pytest.hookimpl(tryfirst=True)  # before -k / -m deselect anything
 def pytest_collection_modifyitems(config, items):
+    collected = set()
     for item in items:
-        if item.nodeid in SLOW_TESTS:
+        tail = item.nodeid.partition("::")[2]
+        nodeid = f"{_from_root(item.path)}::{tail}"
+        collected.add(nodeid)
+        if nodeid in SLOW_TESTS:
             item.add_marker(pytest.mark.slow)
+    # a SLOW_TESTS entry must name a collected test: a renamed or moved slow
+    # test would otherwise silently rejoin the budgeted default gate. Files
+    # not collected, or narrowed to single tests on the command line, are
+    # not checked.
+    files = {n.partition("::")[0] for n in collected}
+    narrowed = {
+        _from_root(config.invocation_params.dir / arg.partition("::")[0])
+        for arg in config.args
+        if "::" in arg
+    }
+    stale = sorted(
+        t for t in SLOW_TESTS
+        if t not in collected
+        and (
+            not (ROOT / t.partition("::")[0]).is_file()
+            or t.partition("::")[0] in files - narrowed
+        )
+    )
+    if stale:
+        raise pytest.UsageError(
+            "SLOW_TESTS entries match no collected test: " + ", ".join(stale)
+        )

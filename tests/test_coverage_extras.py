@@ -1106,9 +1106,9 @@ def test_semdedup_stage_keeps_coverage_less_docs(spark, sf_dir):
 
 def test_x_importance_wave_value_is_pinned(spark):
     """r13 verdict #8: the bench-only importance-wave entry's evidence
-    value is seed-deterministic (partition-seeded rand/randn columns);
-    the run must reproduce the committed pin exactly — a drift means the
-    sampling columns or weight algebra changed, not noise."""
+    value is seed-deterministic (driver-side seeded draws); the run must
+    reproduce the committed pin exactly — a drift means the draws or
+    weight algebra changed, not noise."""
     import sys
 
     sys.path.insert(0, "/root/repo")

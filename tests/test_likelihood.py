@@ -112,6 +112,41 @@ def test_inject_recover_grid(spark, residuals_df):
     assert abs(best["gamma"] - 4.0) <= 1.5
 
 
+def test_run_adaptive_inference_releases_persisted_residuals(spark, residuals_df):
+    """run_adaptive_inference persists the residuals for its waves and
+    releases them when it returns, on error as well; a caller's own cache
+    is left alone."""
+    import json
+
+    from enterprise_warp_spark.likelihood.inference import run_adaptive_inference
+    from enterprise_warp_spark.likelihood.sampling import MAX_ADAPTIVE_N_PER_ROUND
+
+    def persisted():
+        return len(spark.sparkContext._jsc.getPersistentRDDs())
+
+    rows = [{"signal": "spin_noise", "option_json": json.dumps("powerlaw_4_nfreqs")}]
+    res = residuals_df.filter(F.col("psr") == "J0001+0001")
+    before = persisted()
+    scored, _ = run_adaptive_inference(
+        spark, res, rows, rounds=2, n_per_round=32, nfreqs=4, seed=3
+    )
+    assert scored.count() == 2 * 32
+    assert persisted() == before
+    assert not res.storageLevel.useMemory
+    with pytest.raises(ValueError, match="n_per_round"):
+        run_adaptive_inference(
+            spark, res, rows, rounds=2, n_per_round=MAX_ADAPTIVE_N_PER_ROUND + 1,
+            nfreqs=4, seed=3,
+        )
+    assert persisted() == before
+    assert not res.storageLevel.useMemory
+    # the caller's cached frame stays cached
+    run_adaptive_inference(
+        spark, residuals_df, rows, rounds=1, n_per_round=16, nfreqs=4, seed=3
+    )
+    assert residuals_df.storageLevel.useMemory
+
+
 def test_sample_priors(spark):
     from enterprise_warp_spark.likelihood.sampling import Prior, sample_priors
 

@@ -8,6 +8,7 @@ from __future__ import annotations
 
 import duckdb
 import numpy as np
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -161,10 +162,8 @@ def test_normalize_text(spark):
     assert got[2] == "already clean"
 
 
-def test_probit_accuracy(spark):
-    """Acklam inverse-normal-CDF column: known quantiles to ~1e-8."""
-    import pandas as pd
-
+def test_probit_accuracy():
+    """Acklam inverse normal CDF: known quantiles to ~1e-8."""
     from enterprise_warp_spark.likelihood.sampling import probit
 
     known = {
@@ -176,8 +175,8 @@ def test_probit_accuracy(spark):
         0.001: -3.090232306167813,
         0.01: -2.3263478740408408,
     }
-    df = spark.createDataFrame(pd.DataFrame({"p": list(known)}))
-    got = {r["p"]: r["x"] for r in df.select("p", probit(F.col("p")).alias("x")).collect()}
+    ps = np.array(list(known))
+    got = dict(zip(ps, probit(ps)))
     for p, want in known.items():
         assert got[p] == pytest.approx(want, abs=5e-8), p
 
@@ -216,20 +215,16 @@ def test_truncnormal_prior_bounds_and_moments(spark):
     assert df.exceptAll(again).count() == 0
 
 
-def test_probit_clamps_open_interval_endpoints(spark):
+def test_probit_clamps_open_interval_endpoints():
     """ADVICE r4: probit(0) / probit(1) must be large-finite, never NaN —
-    F.rand() can return exactly 0.0 and an infinite truncation bound maps it
-    there (sqrt(-2 log 0) -> inf, tail ratio -> inf/inf = NaN)."""
+    a uniform draw can be exactly 0.0 and an infinite truncation bound maps
+    it there (sqrt(-2 log 0) -> inf, tail ratio -> inf/inf = NaN)."""
     from enterprise_warp_spark.likelihood.sampling import probit
 
-    row = spark.range(1).select(
-        probit(F.lit(0.0)).alias("z0"),
-        probit(F.lit(1.0)).alias("z1"),
-        probit(F.lit(0.5)).alias("zm"),
-    ).first()
-    assert np.isfinite(row["z0"]) and row["z0"] < -7.0
-    assert np.isfinite(row["z1"]) and row["z1"] > 7.0
-    assert row["zm"] == pytest.approx(0.0, abs=1e-8)
+    z0, z1, zm = probit([0.0, 1.0, 0.5])
+    assert np.isfinite(z0) and z0 < -7.0
+    assert np.isfinite(z1) and z1 > 7.0
+    assert zm == pytest.approx(0.0, abs=1e-8)
 
 
 def test_truncnormal_infinite_lower_bound_no_nan(spark):
@@ -260,6 +255,55 @@ def test_adaptive_posterior_n_per_round_contract(spark):
             lambda df: df.select("sample_id", F.lit(0.0).alias("lnl")),
             n_per_round=MAX_ADAPTIVE_N_PER_ROUND + 1,
         )
+
+
+def _two_rows_per_sample(df, poison=False):
+    """Two (sample_id, lnl) rows per sample, as a two-pulsar likelihood
+    returns them; poison makes the first row NaN for x < -2 and the second
+    for x > 2."""
+    first, second = -0.5 * F.col("x") ** 2, -0.5 * F.col("y") ** 2
+    if poison:
+        nan = F.lit(float("nan"))
+        first = F.when(F.col("x") < -2.0, nan).otherwise(first)
+        second = F.when(F.col("x") > 2.0, nan).otherwise(second)
+    return df.select("sample_id", first.alias("lnl")).unionByName(
+        df.select("sample_id", second.alias("lnl"))
+    )
+
+
+def _summed(df):
+    return df.select(
+        "sample_id", (-0.5 * F.col("x") ** 2 - 0.5 * F.col("y") ** 2).alias("lnl")
+    )
+
+
+def _cem_table(spark, score_fn):
+    from enterprise_warp_spark.likelihood.sampling import Prior, adaptive_posterior
+
+    priors = [Prior("x", "uniform", -4.0, 4.0), Prior("y", "uniform", -4.0, 4.0)]
+    scored, _ = adaptive_posterior(
+        spark, priors, score_fn, rounds=2, n_per_round=64, seed=4
+    )
+    return scored.toPandas().sort_values("sample_id").reset_index(drop=True)
+
+
+def test_adaptive_posterior_sums_rows_per_sample_on_driver(spark):
+    """score_fn may return one row per pulsar: the sampler sums the rows
+    sharing a sample_id, so the pooled table equals the one pooled from a
+    score_fn that returns the sum itself."""
+    got = _cem_table(spark, _two_rows_per_sample)
+    want = _cem_table(spark, _summed)
+    assert len(got) == 2 * 64
+    pd.testing.assert_frame_equal(got, want)
+
+
+def test_adaptive_posterior_nan_pulsar_row_drops_sample(spark):
+    """A NaN in either row makes the sample's total NaN (as Spark's sum
+    does), so the CEM pool drops it instead of keeping the other row."""
+    got = _cem_table(spark, lambda df: _two_rows_per_sample(df, poison=True))
+    assert len(got) > 0
+    assert got["x"].between(-2.0, 2.0).all()
+    assert np.isfinite(got["lnl"]).all()
 
 
 # ---------------------------------------------------------------------------
